@@ -1,48 +1,39 @@
 """Registry-rotation invariants for the driver contract.
 
 The driver verifies only the FIRST 50 entries of ``queries()`` each
-round, so ``__spark_entry__._registry()`` orders queries by
-driver-verification recency (never-checked first, then oldest cohort).
-These tests pin the load-bearing claims that previously lived only in
-comments (ADVICE round 7, item 3):
-
-- the pre-materialized round-N window lists exactly match the
-  CORRECTNESS_r{N}.json the driver actually wrote;
-- the registry order has no duplicates and covers every query;
-- round 8's effective window (first 50) has ZERO overlap with round
-  7's — the rotation footgun that burned rounds 6 and 7 cannot recur
-  silently.
+round, so ``__spark_entry__`` orders the registered queries by the last
+round in which each was hash-green in the committed
+``CORRECTNESS_rNN.json`` records.  The first group of tests checks that
+rule on the repo's own records; the second checks ``_rotate`` and the
+record loader on synthetic input.
 """
 
+import importlib
 import json
-import os
-
-import pytest
 
 import __spark_entry__ as entry
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+GREEN = {"hash_match": True, "err": None}
+RED = {"hash_match": None, "err": "TypeError: unhashable type: 'list'"}
+MISMATCH = {"hash_match": False, "err": None}
 
 
-def _correctness(round_no: int) -> dict:
-    path = os.path.join(REPO, f"CORRECTNESS_r{round_no:02d}.json")
-    if not os.path.exists(path):
-        pytest.skip(f"CORRECTNESS_r{round_no:02d}.json not present")
-    with open(path) as fh:
-        return json.load(fh)
+def _registered() -> set:
+    names = set()
+    for mod in ("whisper_queries", "relational", "llm_ops", "multimodal",
+                "graphite_funcs", "streaming_queries"):
+        names |= set(importlib.import_module(
+            f"go_whisper_spark.operators.{mod}").QUERIES)
+    return names
 
 
-def test_r07_window_matches_driver_record():
-    rec = _correctness(7)
-    assert len(entry._R07_WINDOW) == 50
-    assert len(set(entry._R07_WINDOW)) == 50
-    assert set(entry._R07_WINDOW) == set(rec.keys())
+def _last_green(records: dict) -> dict:
+    return {name: rnd for rnd in sorted(records)
+            for name, row in records[rnd].items()
+            if row["hash_match"] and row["err"] is None}
 
 
-def test_r07_window_disjoint_from_r06():
-    rec6 = _correctness(6)
-    assert not set(entry._R07_WINDOW) & set(rec6.keys())
-
+# --- the rule on the committed records -------------------------------
 
 def test_registry_order_no_duplicates_and_total():
     queries, oracles = entry._registry()
@@ -52,338 +43,56 @@ def test_registry_order_no_duplicates_and_total():
     assert set(oracles) <= set(queries)
 
 
-def test_r08_window_matches_driver_record():
-    """_R08_WINDOW (the round-9 rotation seed) must equal the window
-    the driver actually hashed in round 8 (50/50 green)."""
-    rec = _correctness(8)
-    assert len(entry._R08_WINDOW) == 50
-    assert len(set(entry._R08_WINDOW)) == 50
-    assert set(entry._R08_WINDOW) == set(rec.keys())
+def test_order_is_permutation_of_registered_names():
+    names = list(entry.queries())
+    assert sorted(names) == sorted(_registered())
 
 
-def test_round9_window_disjoint_from_r08():
-    """The round-9 window (now the historical _R09_WINDOW list) did
-    not re-check round 8 (nor round 7), and included every
-    never-driver-checked round-8 deferral plus the two round-4
-    stragglers."""
-    window = entry._R09_WINDOW
-    rec8 = _correctness(8)
-    overlap = set(window) & set(rec8.keys())
-    assert not overlap, f"round-9 window re-checks round-8 greens: {sorted(overlap)}"
-    rec7 = _correctness(7)
-    assert not set(window) & set(rec7.keys())
-    missing = [n for n in entry._R08_DEFERRED if n not in window]
-    assert not missing, f"never-checked deferrals missed the window: {missing}"
-    for name in ("w_asof_join", "w_session_window_native"):
-        assert name in window, f"{name} (driver evidence stale since r4) missed the window"
+def test_order_is_nondecreasing_in_last_green_round():
+    last = _last_green(entry._records())
+    rounds = [last.get(n, 0) for n in entry.queries()]
+    assert rounds == sorted(rounds)
 
 
-def test_r09_window_matches_driver_record():
-    """_R09_WINDOW (the round-10 rotation seed) must equal the window
-    the driver actually hashed in round 9 (50/50 green)."""
-    rec = _correctness(9)
-    assert len(entry._R09_WINDOW) == 50
-    assert len(set(entry._R09_WINDOW)) == 50
-    assert set(entry._R09_WINDOW) == set(rec.keys())
+def test_first_fifty_skip_the_newest_records_greens():
+    records = entry._records()
+    newest = records[max(records)]
+    greens = {n for n, row in newest.items()
+              if row["hash_match"] and row["err"] is None}
+    window = list(entry.queries())[:50]
+    assert len(window) == 50
+    assert not set(window) & greens
 
 
-def test_round10_window_disjoint_from_r09():
-    """The round-10 window (now the historical _R10_WINDOW list) did
-    not re-check round 9 (nor round 8) and fronted every
-    never-driver-checked round-9 deferral — the corrected rotation
-    from VERDICT r9 item 1."""
-    window = entry._R10_WINDOW
-    assert not set(window) & set(entry._R09_WINDOW), (
-        "round-10 window re-checks round-9 greens")
-    rec8 = _correctness(8)
-    assert not set(window) & set(rec8.keys())
-    missing = [n for n in entry._R09_DEFERRED if n not in window]
-    assert not missing, f"never-checked deferrals missed the window: {missing}"
+# --- _rotate and the loader on synthetic records ---------------------
+
+def test_never_checked_query_sorts_first():
+    records = {3: {"a": GREEN, "b": GREEN}}
+    assert entry._rotate(["a", "b", "new"], records) == ["new", "a", "b"]
 
 
-def test_r10_window_matches_driver_record():
-    """_R10_WINDOW (the round-11 rotation seed) must equal the window
-    the driver actually hashed in round 10 (50/50 green)."""
-    rec = _correctness(10)
-    assert len(entry._R10_WINDOW) == 50
-    assert len(set(entry._R10_WINDOW)) == 50
-    assert set(entry._R10_WINDOW) == set(rec.keys())
+def test_red_latest_check_sorts_by_earlier_green_round():
+    # s_kmeans_step's history: green in r10, red in r12, green in r13.
+    records = {10: {"k": GREEN}, 11: {"a": GREEN},
+               12: {"k": RED, "b": GREEN, "c": MISMATCH}}
+    names = ["a", "b", "c", "k"]
+    assert entry._rotate(names, records) == ["c", "k", "a", "b"]
+    records[13] = {"k": GREEN}
+    assert entry._rotate(names, records) == ["c", "a", "b", "k"]
 
 
-def test_round11_window_disjoint_from_r10():
-    """The round-11 window (now the historical _R11_WINDOW list) did
-    not re-check rounds 8-10 and fronted every never-driver-checked
-    round-10 deferral (the render-layer compositions + bronze
-    compaction) — VERDICT r10 item 1."""
-    window = entry._R11_WINDOW
-    assert not set(window) & set(entry._R10_WINDOW), (
-        "round-11 window re-checks round-10 greens")
-    assert not set(window) & set(entry._R09_WINDOW)
-    assert not set(window) & set(entry._R08_WINDOW)
-    missing = [n for n in entry._R10_DEFERRED if n not in window]
-    assert not missing, f"never-checked deferrals missed the window: {missing}"
+def test_unregistered_record_keys_are_ignored():
+    records = {1: {"gone": GREEN, "a": GREEN}, 2: {"renamed_away": GREEN}}
+    assert entry._rotate(["b", "a"], records) == ["b", "a"]
 
 
-def test_r11_window_matches_driver_record():
-    """_R11_WINDOW (the round-12 rotation seed) must equal the window
-    the driver actually hashed in round 11 (50/50 green)."""
-    rec = _correctness(11)
-    assert len(entry._R11_WINDOW) == 50
-    assert len(set(entry._R11_WINDOW)) == 50
-    assert set(entry._R11_WINDOW) == set(rec.keys())
+def test_empty_records_give_registry_order():
+    assert entry._rotate(["c", "a", "b"], {}) == ["c", "a", "b"]
 
 
-def test_round12_window_disjoint_from_r11():
-    """The round-12 window (now the historical _R12_WINDOW list) did
-    not re-check rounds 9-11 and fronted every never-driver-checked
-    round-11 deferral — VERDICT r11 item 1."""
-    window = entry._R12_WINDOW
-    assert not set(window) & set(entry._R11_WINDOW), (
-        "round-12 window re-checks round-11 greens")
-    assert not set(window) & set(entry._R10_WINDOW)
-    assert not set(window) & set(entry._R09_WINDOW)
-    missing = [n for n in entry._R11_DEFERRED if n not in window]
-    assert not missing, f"never-checked deferrals missed the window: {missing}"
-
-
-def test_r12_window_matches_driver_record():
-    """_R12_WINDOW (the round-13 rotation seed) must equal the window
-    the driver actually hashed in round 12 (49/50 green; the one red,
-    s_kmeans_step, is _R12_RED and re-fronts the round-13 window)."""
-    rec = _correctness(12)
-    assert len(entry._R12_WINDOW) == 50
-    assert len(set(entry._R12_WINDOW)) == 50
-    assert set(entry._R12_WINDOW) == set(rec.keys())
-    red = {n for n, r in rec.items() if r.get("err") or not r.get("hash_match")}
-    assert red == set(entry._R12_RED), (
-        "red rows in the driver record must all re-front via _R12_RED")
-
-
-def test_round13_window_disjoint_from_r12():
-    """The round-13 window (now the historical _R13_WINDOW list) did
-    not re-check the rounds 10-12 GREENS (the one r12 red,
-    s_kmeans_step, re-checked by design and rode at the front), and
-    fronted every never-driver-checked round-12 deferral."""
-    window = entry._R13_WINDOW
-    greens12 = set(entry._R12_WINDOW) - set(entry._R12_RED)
-    assert not set(window) & greens12, (
-        "round-13 window re-checks round-12 greens")
-    assert not set(window) & set(entry._R11_WINDOW)
-    assert not set(window) & set(entry._R10_WINDOW)
-    missing = [n for n in entry._R12_DEFERRED if n not in window]
-    assert not missing, f"never-checked deferrals missed the window: {missing}"
-    assert window[0] == "s_kmeans_step", (
-        "the r12 red row must ride at the very front of the window")
-
-
-def test_r13_window_matches_driver_record():
-    """_R13_WINDOW (the round-14 rotation seed) must equal the window
-    the driver actually hashed in round 13 (50/50 green — zero red
-    rows, so no _R13_RED block exists)."""
-    rec = _correctness(13)
-    assert len(entry._R13_WINDOW) == 50
-    assert len(set(entry._R13_WINDOW)) == 50
-    assert set(entry._R13_WINDOW) == set(rec.keys())
-    red = {n for n, r in rec.items() if r.get("err") or not r.get("hash_match")}
-    assert not red, f"round-13 record has red rows with no _R13_RED block: {red}"
-
-
-def test_round14_window_disjoint_from_r13():
-    """The round-14 window (now the historical _R14_WINDOW list) did
-    not re-check the rounds 11-13 greens (round 13 was fully green,
-    so no red row re-fronted) and fronted every never-driver-checked
-    round-13 deferral."""
-    window = entry._R14_WINDOW
-    assert not set(window) & set(entry._R13_WINDOW), (
-        "round-14 window re-checks round-13 greens")
-    assert not set(window) & set(entry._R12_WINDOW)
-    assert not set(window) & set(entry._R11_WINDOW)
-    missing = [n for n in entry._R13_DEFERRED if n not in window]
-    assert not missing, f"never-checked deferrals missed the window: {missing}"
-
-
-def test_r14_window_matches_driver_record():
-    """_R14_WINDOW (the round-15 rotation seed) must equal the window
-    the driver actually hashed in round 14 (50/50 green — zero red
-    rows, so no _R14_RED block exists)."""
-    rec = _correctness(14)
-    assert len(entry._R14_WINDOW) == 50
-    assert len(set(entry._R14_WINDOW)) == 50
-    assert set(entry._R14_WINDOW) == set(rec.keys())
-    red = {n for n, r in rec.items() if r.get("err") or not r.get("hash_match")}
-    assert not red, f"round-14 record has red rows with no _R14_RED block: {red}"
-
-
-def test_round15_window_disjoint_from_r14():
-    """The round-15 window (now the historical _R15_WINDOW list) did
-    not re-check the rounds 12-14 greens (round 14 was fully green,
-    so no red row re-fronted) and fronted every never-driver-checked
-    round-14 deferral.  The r08 cohort WAS expected in the window —
-    it was the oldest driver evidence at the time."""
-    window = entry._R15_WINDOW
-    assert not set(window) & set(entry._R14_WINDOW), (
-        "round-15 window re-checks round-14 greens")
-    assert not set(window) & set(entry._R13_WINDOW)
-    assert not set(window) & set(entry._R12_WINDOW)
-    missing = [n for n in entry._R14_DEFERRED if n not in window]
-    assert not missing, f"never-checked deferrals missed the window: {missing}"
-
-
-def test_r15_window_matches_driver_record():
-    """_R15_WINDOW (the round-16 rotation seed) must equal the window
-    the driver actually hashed in round 15 (50/50 green — zero red
-    rows, so no _R15_RED block exists)."""
-    rec = _correctness(15)
-    assert len(entry._R15_WINDOW) == 50
-    assert len(set(entry._R15_WINDOW)) == 50
-    assert set(entry._R15_WINDOW) == set(rec.keys())
-    red = {n for n, r in rec.items() if r.get("err") or not r.get("hash_match")}
-    assert not red, f"round-15 record has red rows with no _R15_RED block: {red}"
-
-
-def test_round16_window_disjoint_from_r15():
-    """The round-16 window (now the historical _R16_WINDOW list) did
-    not re-check the rounds 13-15 greens (round 15 was fully green,
-    so no red row re-fronted) and fronted every never-driver-checked
-    round-15 deferral.  The r08-window tail and the r09-cohort front
-    WERE expected in the window — they were the oldest driver
-    evidence at the time."""
-    window = entry._R16_WINDOW
-    assert not set(window) & set(entry._R15_WINDOW), (
-        "round-16 window re-checks round-15 greens")
-    assert not set(window) & set(entry._R14_WINDOW)
-    assert not set(window) & set(entry._R13_WINDOW)
-    missing = [n for n in entry._R15_DEFERRED if n not in window]
-    assert not missing, f"never-checked deferrals missed the window: {missing}"
-
-
-def test_r16_window_matches_driver_record():
-    """_R16_WINDOW (the round-17 rotation seed) must equal the window
-    the driver actually hashed in round 16 (50/50 green — zero red
-    rows, so no _R16_RED block exists)."""
-    rec = _correctness(16)
-    assert len(entry._R16_WINDOW) == 50
-    assert len(set(entry._R16_WINDOW)) == 50
-    assert set(entry._R16_WINDOW) == set(rec.keys())
-    red = {n for n, r in rec.items() if r.get("err") or not r.get("hash_match")}
-    assert not red, f"round-16 record has red rows with no _R16_RED block: {red}"
-
-
-def test_r17_window_matches_driver_record():
-    """_R17_WINDOW (the round-18 rotation seed) must equal the window
-    the driver actually hashed in round 17 (50/50 green — zero red
-    rows, so no _R17_RED block exists)."""
-    rec = _correctness(17)
-    assert len(entry._R17_WINDOW) == 50
-    assert len(set(entry._R17_WINDOW)) == 50
-    assert set(entry._R17_WINDOW) == set(rec.keys())
-    red = {n for n, r in rec.items() if r.get("err") or not r.get("hash_match")}
-    assert not red, f"round-17 record has red rows with no _R17_RED block: {red}"
-
-
-def test_round18_window_disjoint_from_r17():
-    """The round-18 window (now the historical _R18_WINDOW list) did
-    not re-check the rounds 15-17 greens (round 17 was fully green,
-    so no red row re-fronted) and fronted every never-driver-checked
-    round-17 deferral.  The r10-window remainder WAS expected in the
-    window — it was the oldest driver evidence at the time."""
-    window = entry._R18_WINDOW
-    assert not set(window) & set(entry._R17_WINDOW), (
-        "round-18 window re-checks round-17 greens")
-    assert not set(window) & set(entry._R16_WINDOW)
-    assert not set(window) & set(entry._R15_WINDOW)
-    missing = [n for n in entry._R17_DEFERRED if n not in window]
-    assert not missing, f"never-checked deferrals missed the window: {missing}"
-
-
-def test_r18_window_matches_driver_record():
-    """_R18_WINDOW (the round-19 rotation seed) must equal the window
-    the driver actually hashed in round 18 (50/50 green — zero red
-    rows, so no _R18_RED block exists)."""
-    rec = _correctness(18)
-    assert len(entry._R18_WINDOW) == 50
-    assert len(set(entry._R18_WINDOW)) == 50
-    assert set(entry._R18_WINDOW) == set(rec.keys())
-    red = {n for n, r in rec.items() if r.get("err") or not r.get("hash_match")}
-    assert not red, f"round-18 record has red rows with no _R18_RED block: {red}"
-
-
-def test_round19_window_disjoint_from_r18():
-    """The round-19 window (now the historical _R19_WINDOW list) did
-    not re-check the rounds 16-18 greens (round 18 was fully green,
-    so no red row re-fronted) and fronted every never-driver-checked
-    round-18 deferral.  The r11-cohort-era remainder WAS expected in
-    the window — it was the oldest driver evidence at the time."""
-    window = entry._R19_WINDOW
-    assert not set(window) & set(entry._R18_WINDOW), (
-        "round-19 window re-checks round-18 greens")
-    assert not set(window) & set(entry._R17_WINDOW)
-    assert not set(window) & set(entry._R16_WINDOW)
-    missing = [n for n in entry._R18_DEFERRED if n not in window]
-    assert not missing, f"never-checked deferrals missed the window: {missing}"
-
-
-def test_r19_window_matches_driver_record():
-    """_R19_WINDOW (the round-20 rotation seed) must equal the window
-    the driver actually hashed in round 19 (50/50 green — zero red
-    rows, so no _R19_RED block exists)."""
-    rec = _correctness(19)
-    assert len(entry._R19_WINDOW) == 50
-    assert len(set(entry._R19_WINDOW)) == 50
-    assert set(entry._R19_WINDOW) == set(rec.keys())
-    red = {n for n, r in rec.items() if r.get("err") or not r.get("hash_match")}
-    assert not red, f"round-19 record has red rows with no _R19_RED block: {red}"
-
-
-def test_round20_window_disjoint_from_r19():
-    """First 50 of the rotated registry must not re-check the rounds
-    17-19 greens EXCEPT the _R20_PRIORITY block — VERDICT r19 item 6
-    explicitly fronts the r19-optimized query paths (their driver
-    evidence predates the optimization), overriding the
-    oldest-evidence rule for exactly those ten — and must front every
-    never-driver-checked round-19 deferral."""
-    queries, _ = entry._registry()
-    window = list(queries)[:50]
-    prio = set(entry._R20_PRIORITY)
-    assert not (set(window) - prio) & set(entry._R19_WINDOW), (
-        "round-20 window re-checks round-19 greens outside the priority block")
-    assert not (set(window) - prio) & set(entry._R18_WINDOW)
-    assert not (set(window) - prio) & set(entry._R17_WINDOW)
-    missing = [n for n in entry._R19_DEFERRED if n not in window]
-    assert not missing, f"never-checked deferrals missed the window: {missing}"
-    missing_prio = [n for n in entry._R20_PRIORITY if n not in window]
-    assert not missing_prio, (
-        f"priority re-checks missed the window: {missing_prio}")
-
-
-def test_r20_window_matches_first_fifty():
-    """Once frozen mid-round, the pre-materialized round-20 window
-    list (the round-21 rotation seed) must stay equal to the
-    registry's actual first 50 — the drift failure mode enforced
-    every round since round 8.  Late round-20 additions belong in
-    _R20_DEFERRED, which this equality keeps OUT of the window."""
-    if not getattr(entry, "_R20_WINDOW", None):
-        pytest.skip("_R20_WINDOW not yet frozen this round")
-    queries, _ = entry._registry()
-    assert entry._R20_WINDOW == list(queries)[:50]
-    assert len(set(entry._R20_WINDOW)) == 50
-
-
-def test_checked_cohorts_are_registered():
-    """Every cohort name still resolves to a real query (catches renames)."""
-    queries, _ = entry._registry()
-    for lst in (entry._R04_CHECKED, entry._R05_CHECKED,
-                entry._R6_DEFERRED, entry._R06_CHECKED, entry._R07_WINDOW,
-                entry._R08_WINDOW, entry._R08_DEFERRED,
-                entry._R09_WINDOW, entry._R09_DEFERRED,
-                entry._R10_WINDOW, entry._R10_DEFERRED,
-                entry._R11_WINDOW, entry._R11_DEFERRED,
-                entry._R12_WINDOW, entry._R12_DEFERRED, entry._R12_RED,
-                entry._R13_WINDOW, entry._R13_DEFERRED,
-                entry._R14_WINDOW, entry._R14_DEFERRED,
-                entry._R15_WINDOW, entry._R15_DEFERRED,
-                entry._R16_WINDOW, entry._R16_DEFERRED,
-                entry._R17_WINDOW, entry._R17_DEFERRED,
-                entry._R18_WINDOW, entry._R18_DEFERRED):
-        missing = [n for n in lst if n not in queries]
-        assert not missing, f"cohort names not in registry: {missing}"
+def test_loader_reads_only_round_records(tmp_path):
+    (tmp_path / "CORRECTNESS_r20.json").write_text(json.dumps({"a": GREEN}))
+    (tmp_path / "CORRECTNESS_r07.json").write_text(json.dumps({"b": RED}))
+    (tmp_path / "CORRECTNESS_r20_c8.json").write_text(json.dumps({"x": GREEN}))
+    (tmp_path / "BENCH_r20.json").write_text("{}")
+    assert entry._records(str(tmp_path)) == {20: {"a": GREEN}, 7: {"b": RED}}
