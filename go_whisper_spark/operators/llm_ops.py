@@ -41,6 +41,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from go_whisper_spark.session import session_memo
 from go_whisper_spark.sources.tables import load_table, spread_scan
 
 # ---------------------------------------------------------------- hashing
@@ -927,31 +928,30 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= 8
 DIM = 64
 
 
-_DOT_CACHE: dict = {}
-
-
 def _dot_expr(a: str, b: str):
     """Unrolled 64-term dot product: flat Add chain stays inside
     whole-stage codegen (higher-order folds are interpreted and were
     the bottleneck on the all-pairs join).  FP-identical to the fold:
     ``0.0 + x`` is exact, so both shapes add in the same order.
 
-    Memoized per (a, b) name pair: Column objects are immutable
+    Memoized per (active session, a, b): Column objects are immutable
     unresolved expressions, so the ~250 py4j round-trips the unrolled
-    chain costs are paid once per process, not once per plan build
+    chain costs are paid once per session, not once per plan build
     (measured: the composed PQ-IVF query spent seconds re-building
-    these trees on every invocation).
+    these trees on every invocation).  A Column is bound to its JVM,
+    so it must not outlive the session that built it.
     """
-    key = (a, b)
-    if key not in _DOT_CACHE:
+
+    def build():
         terms = [
             F.element_at(a, i + 1) * F.element_at(b, i + 1) for i in range(DIM)
         ]
         out = terms[0]
         for t in terms[1:]:
             out = out + t
-        _DOT_CACHE[key] = out
-    return _DOT_CACHE[key]
+        return out
+
+    return session_memo(SparkSession.active(), "dot_expr", (a, b), build)
 
 
 def _cos_frames(spark, sf_dir):
@@ -1026,28 +1026,17 @@ _EMPTY_PAIRS = pd.DataFrame(
 # (s_cosine_topk 10, s_mrl_eval 10, s_hybrid_rrf 20, s_ann_recall 50).
 _QVEC_MAX = 50
 
-# Per-process memo of the collected query-vector matrix, keyed by
-# (applicationId, corpus) — the tri-substrate / pq-index discipline
-# (VERDICT r19 item 2: the per-invocation control-plane collect job +
-# its planning gap cost s_cosine_topk 0.31 s on a 0.84 s query; the
-# matrix is <= 50 x 64 doubles and every timed rep still streams the
-# FULL corpus through the sims kernel).  Keyed by applicationId so a
-# fresh session never reads a stale entry; never persisted across
-# processes/runs.
-_QVEC_CACHE: dict = {}
-
-
 def _query_vectors(spark: SparkSession, sf_dir: str):
     """(qids, Q) for ``vec_id < _QVEC_MAX``, sorted by vec_id —
-    collected at most once per (session, corpus) and sliced by each
-    family member's own qmax.  Values are the same
-    ``cast("double")`` vectors the JVM frame carries."""
-    app_id = spark.sparkContext.applicationId
-    for k in [k for k in _QVEC_CACHE if k[0] != app_id]:
-        del _QVEC_CACHE[k]
-    key = (app_id, sf_dir)
-    hit = _QVEC_CACHE.get(key)
-    if hit is None:
+    collected at most once per (session, corpus) through
+    ``session_memo`` and sliced by each family member's own qmax.
+    Values are the same ``cast("double")`` vectors the JVM frame
+    carries.  The per-invocation control-plane collect job and its
+    planning gap cost s_cosine_topk 0.31 s on a 0.84 s query; the
+    matrix is <= 50 x 64 doubles and every run still streams the full
+    corpus through the sims kernel."""
+
+    def build():
         rows = sorted(
             _emb(spark, sf_dir)
             .where(F.col("vec_id") < _QVEC_MAX)
@@ -1064,9 +1053,9 @@ def _query_vectors(spark: SparkSession, sf_dir: str):
             if rows
             else np.zeros((0, DIM), dtype=np.float64)
         )
-        hit = (qids, Q)
-        _QVEC_CACHE[key] = hit
-    return hit
+        return qids, Q
+
+    return session_memo(spark, "query_vectors", sf_dir, build)
 
 
 def _brute_topk(spark: SparkSession, sf_dir: str, qmax: int, k: int) -> DataFrame:
@@ -5671,15 +5660,12 @@ GROUP BY 1
 PQ_M, PQ_D, PQ_K = 4, 16, 8  # sub-blocks × dims/block × codes/block
 
 
-_L2_CACHE: dict = {}
-
-
 def _l2_16(a: str, b: str):
     """Unrolled 16-term squared-L2 — pure +,-,× on doubles (NO libm),
     so the value is bit-identical across engines; no rounding needed
     anywhere in the PQ pipeline.  Memoized like ``_dot_expr``."""
-    key = (a, b)
-    if key not in _L2_CACHE:
+
+    def build():
         terms = [
             (F.element_at(a, i + 1) - F.element_at(b, i + 1))
             * (F.element_at(a, i + 1) - F.element_at(b, i + 1))
@@ -5688,8 +5674,9 @@ def _l2_16(a: str, b: str):
         out = terms[0]
         for t in terms[1:]:
             out = out + t
-        _L2_CACHE[key] = out
-    return _L2_CACHE[key]
+        return out
+
+    return session_memo(SparkSession.active(), "l2_16", (a, b), build)
 
 
 def _pq_frames(spark: SparkSession, sf_dir: str, train_where=None):
@@ -6374,38 +6361,22 @@ def _pq_read_path(
     )
 
 
-# Per-process memo of built PQ-IVF indexes, keyed by (session, corpus).
-# The index is the PERSISTED artifact of a one-time build in any real
-# deployment; memoizing it is what lets s_pq_search_serve price the
-# route→ADC→rerank serving path alone (VERDICT r9 item 3: the 7.2 s
-# bench number for s_pq_search was dominated by rebuilding the index
-# every rep).  localCheckpoint pins the materialized frame to the
-# session, so the cache key includes the session identity.
-_PQ_INDEX_CACHE: dict = {}
-
-
 def pq_ivf_index_cached(spark: SparkSession, sf_dir: str):
-    """``pq_ivf_index`` built at most once per (session, corpus):
-    returns ``(index, cent_rows)`` with the single-relation index
-    localCheckpointed (truncated lineage — readers pay a columnar
-    scan of (vec_id, cell, rv, rnorm), never the build DAG) and the
-    8-row centroid table collected to driver rows for closure-shipping
-    into the routing kernel."""
-    # applicationId, not id(spark): CPython reuses id() after GC, so a
-    # fresh session could hit a stale entry holding a checkpointed
-    # frame bound to a STOPPED SparkContext (ADVICE r10).  The app id
-    # is unique per context; entries for dead contexts are dropped
-    # here (bounded: at most one live app's entries survive).
-    app_id = spark.sparkContext.applicationId
-    for k in [k for k in _PQ_INDEX_CACHE if k[0] != app_id]:
-        del _PQ_INDEX_CACHE[k]
-    key = (app_id, sf_dir)
-    hit = _PQ_INDEX_CACHE.get(key)
-    if hit is None:
+    """``pq_ivf_index`` built at most once per (session, corpus)
+    through ``session_memo``: returns ``(index, cent_rows)`` with the
+    single-relation index localCheckpointed (truncated lineage —
+    readers pay a columnar scan of (vec_id, cell, rv, rnorm), never
+    the build DAG) and the 8-row centroid table collected to driver
+    rows for closure-shipping into the routing kernel.  The index is
+    the persisted artifact of a one-time build in any real
+    deployment; memoizing it is what lets s_pq_search_serve price the
+    route→ADC→rerank serving path alone."""
+
+    def build():
         index, cents = pq_ivf_index(spark, sf_dir)
-        hit = (index.localCheckpoint(), cents.collect())
-        _PQ_INDEX_CACHE[key] = hit
-    return hit
+        return index.localCheckpoint(), cents.collect()
+
+    return session_memo(spark, "pq_ivf_index", sf_dir, build)
 
 
 def s_pq_search_serve(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -5,6 +5,10 @@ matter identically on a 1000-executor cluster: AQE on (skew joins,
 runtime coalescing), shuffle partitions sized to cores, UTC session
 timezone (whisper is calendar-free integer-seconds math), Arrow enabled
 for the Pandas-UDF slow path.
+
+``session_memo`` is the one place session-scoped state lives: built
+plans, persisted serving substrates and small control-plane metadata,
+never query results.
 """
 
 from __future__ import annotations
@@ -12,6 +16,11 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Entries each memo kind holds before the oldest is evicted.
+_MEMO_MAX = 256
+# kind -> {(applicationId, key): value}, insertion-ordered.
+_MEMOS: dict = {}
 
 
 def get_spark(app_name: str = "go_whisper_spark", cpus: "int | None" = None) -> SparkSession:
@@ -46,3 +55,27 @@ def get_spark(app_name: str = "go_whisper_spark", cpus: "int | None" = None) -> 
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
     return builder.getOrCreate()
+
+
+def session_memo(spark, kind: str, key, build):
+    """``build()`` at most once per (session, kind, key).
+
+    Entries are keyed by the context's applicationId: objects bound to
+    a stopped context (DataFrames, Columns, broadcasts) must never reach
+    a later session, so every call first drops every other application's
+    entries, across all kinds.  Each kind keeps at most ``_MEMO_MAX``
+    entries and evicts the oldest first.  A ``build`` that raises stores
+    nothing."""
+    app_id = spark.sparkContext.applicationId
+    for memo in _MEMOS.values():
+        for k in [k for k in memo if k[0] != app_id]:
+            del memo[k]
+    memo = _MEMOS.setdefault(kind, {})
+    full_key = (app_id, key)
+    if full_key in memo:
+        return memo[full_key]
+    value = build()
+    if len(memo) >= _MEMO_MAX:
+        del memo[next(iter(memo))]
+    memo[full_key] = value
+    return value

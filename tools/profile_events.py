@@ -14,6 +14,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shlex
 import sys
 import tempfile
 
@@ -30,32 +31,19 @@ def main() -> int:
     args = ap.parse_args()
 
     evdir = tempfile.mkdtemp(prefix="gws_evlog_")
-    os.environ["SPARK_GRAFT_EVENTLOG_DIR"] = evdir
+    # the event log is a launch-time setting: hand it to the JVM
+    # get_spark starts, the way perfbench/run.py does
+    os.environ["PYSPARK_SUBMIT_ARGS"] = shlex.join([
+        "--conf", "spark.eventLog.enabled=true",
+        "--conf", f"spark.eventLog.dir={evdir}",
+        "--conf", "spark.eventLog.compress=false",
+        "--conf", "spark.eventLog.rolling.enabled=false",
+        "pyspark-shell",
+    ])
 
-    from pyspark.sql import SparkSession
+    from go_whisper_spark.session import get_spark
 
-    # mirror go_whisper_spark.session.get_spark, plus the event log
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or os.cpu_count()
-    shuffle_parts = int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "0") or 0) or 8
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("gws_profile_events")
-        .config("spark.sql.shuffle.partitions", str(shuffle_parts))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", evdir)
-        .config("spark.eventLog.compress", "false")
-        .config("spark.eventLog.rolling.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark("gws_profile_events")
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entrymod
@@ -76,59 +64,41 @@ def main() -> int:
     app_id = spark.sparkContext.applicationId
     spark.stop()
 
-    # Spark 4 defaults to a rolled, zstd-compressed event log dir
     path = os.path.join(evdir, app_id)
-    if not os.path.exists(path):
-        path = os.path.join(evdir, f"eventlog_v2_{app_id}")
-    if os.path.isdir(path):
-        parts = sorted(p for p in os.listdir(path) if p.startswith("events_"))
-        lines = []
-        for p in parts:
-            fp = os.path.join(path, p)
-            if p.endswith(".zstd"):
-                import zstandard
-
-                with open(fp, "rb") as fh:
-                    data = zstandard.ZstdDecompressor().stream_reader(fh).read()
-                lines.extend(data.decode().splitlines())
-            else:
-                lines.extend(open(fp).read().splitlines())
-    else:
-        lines = open(path).read().splitlines()
+    lines = open(path).read().splitlines()
     jobs = {}        # id -> dict
     stages = {}      # id -> dict
-    if True:
-        for line in lines:
-            ev = json.loads(line)
-            t = ev.get("Event")
-            if t == "SparkListenerJobStart":
-                jid = ev["Job ID"]
-                jobs[jid] = {
-                    "start": ev["Submission Time"],
-                    "desc": (ev.get("Properties") or {}).get(
-                        "spark.job.description", ""),
-                    "stages": [s["Stage ID"] for s in ev["Stage Infos"]],
-                }
-            elif t == "SparkListenerJobEnd":
-                if ev["Job ID"] in jobs:
-                    jobs[ev["Job ID"]]["end"] = ev["Completion Time"]
-            elif t == "SparkListenerStageCompleted":
-                si = ev["Stage Info"]
-                st = stages.setdefault(si["Stage ID"], {})
-                st.update({
-                    "name": si["Stage Name"].split("\n")[0][:80],
-                    "n_tasks": si["Number of Tasks"],
-                    "ms": (si.get("Completion Time", 0)
-                           - si.get("Submission Time", 0)),
-                })
-            elif t == "SparkListenerTaskEnd":
-                sid = ev["Stage ID"]
-                st = stages.setdefault(sid, {})
-                ti = ev.get("Task Info", {})
-                dur = ti.get("Finish Time", 0) - ti.get("Launch Time", 0)
-                st["task_ms"] = st.get("task_ms", 0) + dur
-                st["task_max"] = max(st.get("task_max", 0), dur)
-                st["task_n"] = st.get("task_n", 0) + 1
+    for line in lines:
+        ev = json.loads(line)
+        t = ev.get("Event")
+        if t == "SparkListenerJobStart":
+            jid = ev["Job ID"]
+            jobs[jid] = {
+                "start": ev["Submission Time"],
+                "desc": (ev.get("Properties") or {}).get(
+                    "spark.job.description", ""),
+                "stages": [s["Stage ID"] for s in ev["Stage Infos"]],
+            }
+        elif t == "SparkListenerJobEnd":
+            if ev["Job ID"] in jobs:
+                jobs[ev["Job ID"]]["end"] = ev["Completion Time"]
+        elif t == "SparkListenerStageCompleted":
+            si = ev["Stage Info"]
+            st = stages.setdefault(si["Stage ID"], {})
+            st.update({
+                "name": si["Stage Name"].split("\n")[0][:80],
+                "n_tasks": si["Number of Tasks"],
+                "ms": (si.get("Completion Time", 0)
+                       - si.get("Submission Time", 0)),
+            })
+        elif t == "SparkListenerTaskEnd":
+            sid = ev["Stage ID"]
+            st = stages.setdefault(sid, {})
+            ti = ev.get("Task Info", {})
+            dur = ti.get("Finish Time", 0) - ti.get("Launch Time", 0)
+            st["task_ms"] = st.get("task_ms", 0) + dur
+            st["task_max"] = max(st.get("task_max", 0), dur)
+            st["task_n"] = st.get("task_n", 0) + 1
 
     # restrict to the timed reps' window
     lo = min(m[0] for m in marks)
